@@ -756,10 +756,13 @@ def run_pagerank(cpus: int, n_edges: int, repeats: int = 3) -> dict:
     graph (hash-derived endpoints, 20% of edges aimed at 32 hub nodes
     for realistic in-degree skew, ~n_edges/4 nodes) written ONCE to
     data/ and reused across parallelism levels, then
-    graph.pagerank_fixed_point (5 power iterations: per iteration one
-    src-keyed join + one map-combined groupBy(dst) + one driver scalar)
-    timed best-of-N warm. This is the iterative join+agg shape — a
-    different scaling profile from the scan-heavy datapath and funnel."""
+    graph.pagerank_fixed_point (5 power iterations, each one action:
+    below spark.sql.autoBroadcastJoinThreshold the shares are broadcast
+    onto dst-partitioned edges, above it they join src-partitioned edges
+    through one map-combined groupBy(dst) Exchange; the dangling mass is
+    a broadcast one-row aggregate either way) timed best-of-N warm. This
+    is the iterative join+agg shape — a different scaling profile from
+    the scan-heavy datapath and funnel."""
     import shutil
 
     import pyspark.sql.functions as F
@@ -788,7 +791,6 @@ def run_pagerank(cpus: int, n_edges: int, repeats: int = 3) -> dict:
     n_real = edges.count()
 
     def lap() -> float:
-        spark.catalog.clearCache()
         t0 = time.monotonic()
         pagerank_fixed_point(edges, iters=5).count()
         return time.monotonic() - t0

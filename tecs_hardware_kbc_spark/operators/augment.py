@@ -29,21 +29,7 @@ import math
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 
-
-def _let(val: Column, body) -> Column:
-    """Expression-level ``let``: evaluate ``val`` ONCE per row and bind it
-    as a lambda variable in ``body``.
-
-    Spark evaluates non-lambda-variable subexpressions captured inside a
-    higher-order-function lambda PER ARRAY ELEMENT (there is no
-    subexpression cache across lambda invocations). Any transform that
-    reads its input array through ``element_at`` inside a lambda — i.e.
-    every geometric permutation here — would therefore re-evaluate a
-    *composed* input expression n times per row: O(n²) per image for a
-    chained policy. Binding the input through a 1-element array transform
-    makes it a lambda VARIABLE, which is a cheap per-element slot read.
-    Catalyst still fuses the whole chain into one projection."""
-    return F.element_at(F.transform(F.array(val), body), 1)
+from tecs_hardware_kbc_spark.operators.exprs import _let
 
 
 def _idx(w: Column, h: Column):

@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 
-from tecs_hardware_kbc_spark.operators.augment import (
-    _fetch2d, _idx, _let)
+from tecs_hardware_kbc_spark.operators.augment import _fetch2d, _idx
+from tecs_hardware_kbc_spark.operators.exprs import _let
 
 # 3x3 kernel bank (row-major). Sobel-x/y respond to oriented edges —
 # their IMBALANCE separates striped/elongated structure from isotropic

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from tecs_hardware_kbc_spark.operators.exprs import _let
+
 
 def norm_text(col) -> Column:
     """Dedup normalization: lowercase + whitespace collapse + trim."""
@@ -167,8 +169,6 @@ def duplicate_span_starts(docs: DataFrame, id_col: str = "doc_id",
     slower at sf1.0 (47.9s -> 5.6s query wall after the fix)."""
     from pyspark.sql import Window
 
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     def _fps(ws):
         starts = F.when(
             F.size(ws) >= span_words,
@@ -289,14 +289,12 @@ def minhash_signatures_arr(docs: DataFrame, id_col: str = "doc_id",
     dropDuplicates, vocab distinct, shingle-vocab join). Measured 50k
     docs / 32c: 6.2s vs 38-48s. Every captured array is ``_let``-bound —
     without it the HOF-recapture trap makes this path O(L^2) per row and
-    8x SLOWER (measured 50s), see augment._let.
+    8x SLOWER (measured 50s), see exprs._let.
 
     Prefer this path by default; the vocab-join variant
     (``minhash_signatures``) stays for boilerplate-heavy corpora where
     shingles repeat enough across documents that hashing once per
     distinct shingle beats hashing per occurrence."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     def build(words):
         idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
         grams = F.array_distinct(F.transform(
@@ -396,7 +394,6 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
                 .otherwise(x["sig"]).alias("sig_b"))),
             lambda p: p["a"] != p["b"])))
 
-    from tecs_hardware_kbc_spark.operators.augment import _let
     small = (bucketed.filter(F.size("ds") <= bucket_cap)
              .select(F.explode(_let(F.col("ds"), pairs_of)).alias("p"))
              .select("p.a", "p.b", "p.sig_a", "p.sig_b"))

@@ -36,21 +36,46 @@ two operators that produce such a slice from raw pages:
 
 Scale shape: ``extract_links`` is one narrow projection + one explode
 (output rows = anchors, never more) + one distinct keyed by the edge.
-PageRank per iteration = one join of edges against ranks on ``src``
-(bucket/pre-partition both by the node key and the join is co-located;
-the edge table is cached once and reused every iteration) + one
-map-combined ``groupBy(dst)`` + one O(1) driver scalar (the dangling
-sum — same O(iters) driver state as k-means' centroid stats). No
-global sorts, no driver loops over rows, no all-pairs anything.
+PageRank and HITS are vector iterations over a cached edge list, run in
+one of two regimes chosen once per call (Hybrid Evaluation for
+Distributed Iterative Matrix Computation, SIGMOD 2021). The vector
+(one long per node) is sized from the exact node count and compared
+against Spark's own ``spark.sql.autoBroadcastJoinThreshold``:
+
+* broadcast (the vector fits): the edges are cached hash-partitioned on
+  the key each half-step aggregates by, and so is the node table. Each
+  iteration broadcasts the vector, joins it map-side, and the
+  ``groupBy`` and the node join run with no Exchange.
+* partitioned (it does not, or the threshold is -1): the edges are
+  cached on the join key instead, and the vector joins them through a
+  shuffle, with one map-combined Exchange for the ``groupBy``.
+
+In both regimes the per-iteration scalars (PageRank's dangling mass,
+HITS' L1 sums) are one-row aggregates broadcast and cross-joined into
+the update, so an iteration is one action with no driver round trip,
+and every iteration compiles to the same code. No global sorts, no
+driver loops over rows, no all-pairs anything.
+
+Each iteration's vector is pinned with ``localCheckpoint``: that cuts
+the lineage (without it iteration k re-plans and re-runs every earlier
+one), but its blocks live unreplicated on the executors, so losing an
+executor fails the call instead of recomputing it. Recovery is to rerun
+the call; a reliable ``checkpoint()`` per iteration would survive the
+loss but write every vector to the checkpoint directory.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from tecs_hardware_kbc_spark.operators.exprs import _let
 from tecs_hardware_kbc_spark.operators.urls import (
     canonicalize_url, url_host)
+
+_log = logging.getLogger(__name__)
 
 # href attribute of an anchor tag; group 1 = the raw target. Single- or
 # double-quoted, first href per tag, stops at the closing quote.
@@ -106,8 +131,6 @@ def extract_links(pages: DataFrame, url_col: str = "url",
     endpoints are canonicalized, so the node space matches
     ``urls.canonicalize_url`` keys used everywhere else in the crawl
     loop."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     raw = pages.select(
         canonicalize_url(F.col(url_col)).alias("src"),
         F.explode(F.regexp_extract_all(F.col(html_col),
@@ -130,6 +153,96 @@ def extract_links(pages: DataFrame, url_col: str = "url",
     return edges.distinct()
 
 
+def _partitions(df: DataFrame) -> int:
+    """Partition count of the edge and node layouts: one per core,
+    capped by ``spark.sql.shuffle.partitions``. AQE never coalesces an
+    explicit count, so it is fixed up front near where AQE's
+    parallelism-first coalescing lands for inputs this small; at the
+    configured count, tiny tasks dominate every iteration."""
+    spark = df.sparkSession
+    return min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+               spark.sparkContext.defaultParallelism)
+
+
+def _broadcast_regime(op: str, nodes: DataFrame, n_nodes: int) -> bool:
+    """True when the iterated vector, ``n_nodes`` rows of (node, long),
+    fits under ``spark.sql.autoBroadcastJoinThreshold``. A row is sized
+    the way the planner sizes one without column statistics: an 8-byte
+    header plus each column's default width. A threshold of -1 always
+    selects the partitioned regime."""
+    limit = nodes.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    key = nodes._jdf.schema().apply("node").dataType().defaultSize()
+    size = n_nodes * (8 + key + 8)
+    small = size <= limit
+    _log.info("%s: %d nodes, vector ~%d B vs autoBroadcastJoinThreshold "
+              "%d B: %s regime", op, n_nodes, size, limit,
+              "broadcast" if small else "partitioned")
+    return small
+
+
+def _edges_by(edges: DataFrame, key: str, n_parts: int) -> DataFrame:
+    """The (src, dst) list cached hash-partitioned on ``key``. The
+    explicit partition count keeps AQE from coalescing the layout, and a
+    cached relation keeps its partitioning, so an aggregation or a join
+    keyed by ``key`` on ``n_parts`` partitions reads it with no
+    Exchange. Sorting each input partition on ``key`` first puts equal
+    keys side by side in the shuffle blocks, which then compress ~20%
+    smaller."""
+    return (edges.select("src", "dst").sortWithinPartitions(key)
+            .repartition(n_parts, key).cache())
+
+
+def _node_table(by_src: DataFrame, by_dst: DataFrame,
+                n_parts: int) -> tuple[DataFrame, int]:
+    """(node, out_deg, in_deg) for every endpoint, cached
+    hash-partitioned on ``node`` like the edge layouts, and its exact
+    row count. Sources are read from ``by_src`` and targets from
+    ``by_dst``; with those partitioned on ``n_parts`` by src and by dst,
+    the aggregation needs no Exchange."""
+    ends = (by_src.select(F.col("src").alias("node"), F.lit(1).alias("o"),
+                          F.lit(0).alias("i"))
+            .unionAll(by_dst.select(F.col("dst").alias("node"),
+                                    F.lit(0).alias("o"), F.lit(1).alias("i"))))
+    nodes = (ends.groupBy("node")
+             .agg(F.sum("o").alias("out_deg"), F.sum("i").alias("in_deg"))
+             .repartition(n_parts, "node").cache())
+    return nodes, nodes.count()
+
+
+def _propagate(edges: DataFrame, vec: DataFrame, on: str, by: str,
+               broadcast: bool) -> DataFrame:
+    """(``by``, x): per ``by`` endpoint, the sum of ``vec.x`` over its
+    edges, where ``vec`` (node, x) is keyed by the ``on`` endpoint."""
+    v = vec.select(F.col("node").alias(on), "x")
+    if broadcast:
+        v = F.broadcast(v)
+    return edges.join(v, on).groupBy(by).agg(F.sum("x").alias("x"))
+
+
+def _scalar(vec: DataFrame, agg: Column) -> DataFrame:
+    """A one-row aggregate ``s`` over ``vec``, broadcast for a cross
+    join into the update: the scalar never visits the driver and never
+    becomes a plan literal."""
+    return F.broadcast(vec.agg(agg.alias("s")))
+
+
+def _update(nodes: DataFrame, raw: DataFrame, scalar: DataFrame,
+            value: Column) -> DataFrame:
+    """The next vector (node, out_deg, in_deg, x), materialized with
+    ``localCheckpoint`` (the iteration's one action; see the module
+    docstring for its fault-tolerance trade). ``value`` maps ``x``, the
+    node's propagated sum from ``raw`` (0 when it has none), and the
+    scalar ``s`` to the node's new score."""
+    by = raw.columns[0]
+    return (nodes.join(raw, nodes["node"] == raw[by], "left")
+            .crossJoin(scalar)
+            .select("node", "out_deg", "in_deg",
+                    F.coalesce(F.col("x"), F.lit(0)).alias("x"), "s")
+            .select("node", "out_deg", "in_deg", value.alias("x"))
+            .localCheckpoint(eager=True))
+
+
 def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
                          damping_pct: int = DEFAULT_DAMPING_PCT,
                          scale: int = DEFAULT_SCALE) -> DataFrame:
@@ -139,57 +252,52 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
     ``scale``-unit grid — identical rows from any engine replaying the
     same chain (see module docstring for the update rule). Dangling
     nodes (no out-links) spread their mass uniformly; duplicate edges
-    should be pre-deduped (``extract_links`` already is).
+    should be pre-deduped (``extract_links`` already is). An empty edge
+    list gives an empty frame.
 
-    Plan shape (r6, guide §2.4): the out-degree is attached to the node
-    table ONCE (the old per-iteration ranks-deg join is gone) and the
-    edge list is cached hash-partitioned AND sorted on ``src`` — the
-    layout the per-iteration join wants — so each power iteration pays
-    exactly one Exchange (the dst-keyed inflow aggregation, map-side
-    combined). ``share`` inherits the node partitioning of the
-    checkpointed ranks through the alias, and the inflow table comes
-    out of its groupBy already hash(dst)-partitioned for the rank
-    update join. Ranks are O(#nodes) and never collected; the dangling
-    mass stays an O(1) driver scalar per iteration."""
-    e = (edges.select(F.col("src"), F.col("dst"))
-         .repartition("src").sortWithinPartitions("src").cache())
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    nd = (e.select(F.col("src").alias("node"))
-          .union(e.select(F.col("dst").alias("node")))
-          .distinct()
-          .join(deg, F.col("node") == deg["src"], "left")
-          .select("node", "out_deg")
-          .localCheckpoint(eager=True))
-    n_nodes = nd.count()
-    base = scale // n_nodes
-    d, rem = int(damping_pct), 100 - int(damping_pct)
-
-    ranks = nd.select("node", "out_deg",
-                      F.lit(base).cast("long").alias("rank"))
-    for _ in range(iters):
-        # one materialization per iteration (values unchanged): the
-        # dangling scalar and the shares both read it, and without a
-        # checkpoint the next round's plan re-executes every prior
-        # round — O(iters^2)
-        ranks = ranks.localCheckpoint(eager=True)
-        # O(1) driver scalar per iteration: total rank of dangling nodes
-        dang = ranks.filter(F.col("out_deg").isNull()) \
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("s")) \
-            .collect()[0]["s"]
-        share = ranks.filter(F.col("out_deg").isNotNull()).select(
-            F.col("node").alias("src"),
-            _idiv(F.col("rank"), F.col("out_deg")).alias("share"))
-        inflow = (e.join(share, "src")
-                  .groupBy("dst").agg(F.sum("share").alias("inflow")))
-        dang_per = int(dang) // n_nodes
-        ranks = nd.join(inflow, nd["node"] == inflow["dst"], "left") \
-            .select(
-                "node", "out_deg",
-                _idiv(F.lit(rem * base)
-                      + F.lit(d) * (F.coalesce(F.col("inflow"), F.lit(0))
-                                    + F.lit(dang_per)),
-                      F.lit(100)).alias("rank"))
-    return ranks.select("node", "rank")
+    Plan shape: the input is read once, into an edge cache partitioned
+    on ``dst``; the node table (with out-degrees) comes from that cache
+    plus one Exchange of the source column. In the broadcast regime each iteration
+    broadcasts the shares ``rank // out_deg``, the ``groupBy(dst)``
+    inflow runs on the cached ``dst`` partitions, and the node join is
+    co-partitioned: no Exchange. In the partitioned regime the edges are
+    re-cached on ``src`` and each iteration shuffles the shares onto
+    them plus one map-combined ``groupBy(dst)`` Exchange. The dangling
+    mass is a broadcast one-row aggregate in both. The result is
+    materialized and every cache the call made is released before it
+    returns."""
+    n_parts = _partitions(edges)
+    e = _edges_by(edges, "dst", n_parts)
+    cached = [e]
+    try:
+        nodes, n_nodes = _node_table(e.repartition(n_parts, "src"), e,
+                                     n_parts)
+        cached.append(nodes)
+        if not n_nodes:
+            return nodes.select("node", F.lit(0).cast("long").alias("rank")) \
+                .localCheckpoint(eager=True)
+        small = _broadcast_regime("pagerank", nodes, n_nodes)
+        if not small:
+            e = _edges_by(e, "src", n_parts)
+            cached.append(e)
+        base = scale // n_nodes
+        d, rem = int(damping_pct), 100 - int(damping_pct)
+        update = _idiv(F.lit(rem * base)
+                       + F.lit(d) * (F.col("x")
+                                     + _idiv(F.col("s"), F.lit(n_nodes))),
+                       F.lit(100))
+        ranks = nodes.withColumn("x", F.lit(base).cast("long"))
+        for _ in range(iters):
+            share = ranks.filter(F.col("out_deg") > 0).select(
+                "node", _idiv(F.col("x"), F.col("out_deg")).alias("x"))
+            dang = _scalar(ranks.filter(F.col("out_deg") == 0),
+                           F.coalesce(F.sum("x"), F.lit(0)))
+            ranks = _update(nodes, _propagate(e, share, "src", "dst", small),
+                            dang, update)
+        return ranks.select("node", F.col("x").alias("rank"))
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 # full anchor tag; group 1 = href target, group 2 = the anchor text
@@ -218,8 +326,6 @@ def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
         F.trim(F.regexp_replace(
             F.lower(F.regexp_extract("tag", ANCHOR_RGX, 2)),
             r"\s+", " ")).alias("anchor_text"))
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     return (parsed
             .select(_let(resolve_href(F.col("_page"), F.col("href")),
                          lambda r: canonicalize_url(r)).alias("dst"),
@@ -386,47 +492,53 @@ def hits_fixed_point(edges: DataFrame, iters: int = 2,
         auth(v) = sum of hub(u) over edges u -> v, then L1-snap
         hub(u)  = sum of auth(v) over edges u -> v, then L1-snap
 
-    Per iteration: two node-keyed joins + two map-combined groupBys +
-    two O(1) driver scalars (the L1 sums — the same O(iters) driver
-    state as PageRank's dangling mass). Nodes with no in-links (or no
-    out-links) hold score 0 after the first half-step, as in the
-    reference formulation."""
-    e = edges.select("src", "dst").cache()
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct().cache())
-    n_nodes = nodes.count()
-    hub = nodes.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("hub"))
-    auth = None
-    for _ in range(iters):
-        hub = hub.localCheckpoint(eager=True)
-        a_raw = (e.join(hub.withColumnRenamed("node", "src"), "src")
-                 .groupBy("dst").agg(F.sum("hub").alias("a")))
-        a_sum = int(a_raw.agg(
-            F.coalesce(F.sum("a"), F.lit(1)).alias("s"))
-            .collect()[0]["s"]) or 1
+    Plan shape: the input is read once, into an edge cache partitioned
+    on ``dst``, re-cached on ``src``; the node table (with both degrees)
+    aggregates sources from the one and targets from the other with no
+    Exchange. Each half-step aggregates by one endpoint: authority by
+    ``dst``, hub by ``src``. In the broadcast regime it broadcasts the
+    counterpart scores onto the edge copy partitioned by that key, so
+    the ``groupBy`` and the node join run with no Exchange; in the
+    partitioned regime it uses the copy partitioned by the join key and
+    shuffles the scores plus one map-combined ``groupBy`` Exchange. The
+    L1 sum needs no edge scan (``sum_v auth_raw(v) = sum_u hub(u) *
+    out_deg(u)``, and the same for hubs with in-degrees); it is a
+    broadcast one-row aggregate over the previous vector. Nodes with no
+    in-links (or no out-links) hold score 0 after the first half-step,
+    as in the reference formulation. An empty edge list gives an empty
+    frame. Every cache the call made is released before it returns."""
+    n_parts = _partitions(edges)
+    by = {"dst": _edges_by(edges, "dst", n_parts)}
+    by["src"] = _edges_by(by["dst"], "src", n_parts)
+    cached = list(by.values())
+    try:
+        nodes, n_nodes = _node_table(by["src"], by["dst"], n_parts)
+        cached.append(nodes)
+        if not n_nodes:
+            zero = F.lit(0).cast("long")
+            return nodes.select("node", zero.alias("hub"),
+                                zero.alias("auth")).localCheckpoint(eager=True)
+        small = _broadcast_regime("hits", nodes, n_nodes)
         # SQL `div` (not _idiv): the product reaches scale^2 = 1e18,
         # past the 2^53 exactness window of _idiv's double path
-        auth = (nodes
-                .join(a_raw, nodes.node == a_raw.dst, "left")
-                .select("node",
-                        F.coalesce(F.col("a"), F.lit(0)).alias("_x"))
-                .select("node",
-                        F.expr(f"_x * {scale}L div {a_sum}L")
-                        .alias("auth"))
-                .localCheckpoint(eager=True))
-        h_raw = (e.join(auth.withColumnRenamed("node", "dst"), "dst")
-                 .groupBy("src").agg(F.sum("auth").alias("h")))
-        h_sum = int(h_raw.agg(
-            F.coalesce(F.sum("h"), F.lit(1)).alias("s"))
-            .collect()[0]["s"]) or 1
-        hub = (nodes
-               .join(h_raw, nodes.node == h_raw.src, "left")
-               .select("node",
-                       F.coalesce(F.col("h"), F.lit(0)).alias("_x"))
-               .select("node",
-                       F.expr(f"_x * {scale}L div {h_sum}L")
-                       .alias("hub")))
-    return (hub.join(auth, "node")
-            .select("node", "hub", "auth"))
+        snap = F.expr(f"x * {scale}L div s")
+
+        def half_step(vec, on, agg, deg):
+            total = _scalar(vec, F.greatest(
+                F.coalesce(F.sum(F.col("x") * F.col(deg)), F.lit(1)),
+                F.lit(1)))
+            raw = _propagate(by[agg if small else on],
+                             vec.filter(F.col(deg) > 0), on, agg, small)
+            return _update(nodes, raw, total, snap)
+
+        hub = nodes.withColumn("x", F.lit(scale // n_nodes).cast("long"))
+        auth = None
+        for _ in range(iters):
+            auth = half_step(hub, "src", "dst", "out_deg")
+            hub = half_step(auth, "dst", "src", "in_deg")
+        auth = auth.select("node", F.col("x").alias("auth"))
+        return hub.select("node", F.col("x").alias("hub")).join(
+            F.broadcast(auth) if small else auth, "node")
+    finally:
+        for df in cached:
+            df.unpersist()

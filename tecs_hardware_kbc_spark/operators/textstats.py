@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from tecs_hardware_kbc_spark.operators.dedup import norm_text
+from tecs_hardware_kbc_spark.operators.exprs import _let
 
 # tiny function-word inventories; enough signal for a heuristic lang-id
 STOPWORDS = {
@@ -104,7 +105,7 @@ def _stopword_ratio(text_col, lang: str, words=None) -> Column:
     """``words`` (a pre-bound word-array column, e.g. a ``_let`` lambda
     variable) lets callers share ONE split across several ratios —
     without it each ratio re-splits the text (Spark has no subexpression
-    cache across HOF lambda invocations, see augment._let)."""
+    cache across HOF lambda invocations, see exprs._let)."""
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     if words is None:
         words = _words(text_col)
@@ -117,8 +118,6 @@ def lang_pred_cols(text_col) -> tuple[Column, Column]:
     truth shared by ``language_id`` and the fused curation funnel. The
     word array is ``_let``-bound so the text is split ONCE per row, not
     once per language (measured 5x on the funnel's language gate)."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     def best_of(words):
         scores = F.array(*[
             F.struct(_stopword_ratio(text_col, lang, words).alias("score"),
@@ -170,8 +169,6 @@ def quality_col(text) -> Column:
     """The composite quality score in [0,1], rounded to 6dp (the
     oracle-stable convention). The word array is ``_let``-bound so the
     composite splits the text once per row."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
-
     def composite(words):
         ln, al, sw, wl = quality_components(text, words)
         return F.round((ln + al + sw + wl) / 4.0, 6)

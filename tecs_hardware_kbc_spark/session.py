@@ -18,6 +18,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _memory_bytes() -> int:
+    """Memory this process may use: physical RAM, capped by a cgroup
+    (v2 or v1) limit when one is set."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, or "max" (no limit)
+            pass
+    return min(limits)
+
+
+def _default_heap() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: 48g, or 55% of the
+    available memory on a smaller host (a heap the host cannot back makes
+    the JVM fail at start-up; the rest stays for off-heap, page cache and
+    Python workers)."""
+    return f"{min(48 << 10, int(_memory_bytes() * 0.55) >> 20)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "tecs-hardware-kbc-spark",
@@ -33,7 +55,7 @@ def get_spark(
         except ValueError:
             shuffle_partitions = 32
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_heap()
     # Young-gen sized to half the heap: the pipeline churns short-lived
     # allocation (gram arrays, codegen rows), and with the 48g heap's
     # default NewRatio the young gen is small enough that minor GCs were

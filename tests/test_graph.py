@@ -5,7 +5,7 @@ import pytest
 
 from tecs_hardware_kbc_spark.operators.graph import (
     DEFAULT_DAMPING_PCT, DEFAULT_SCALE, degree_stats, extract_anchor_texts,
-    extract_links, frontier_batch, pagerank_fixed_point)
+    extract_links, frontier_batch, hits_fixed_point, pagerank_fixed_point)
 
 
 def _pages(spark, rows):
@@ -96,6 +96,33 @@ def test_pagerank_dangling_mass_redistributes(spark):
     assert got == _pagerank_py([("a", "b")], iters=2)
     base = DEFAULT_SCALE // 2
     assert got["a"] > (100 - DEFAULT_DAMPING_PCT) * base // 100
+
+
+def test_pagerank_regimes_match_integer_reference(spark, vector_regime,
+                                                  caplog, seeded_graph):
+    for edges, iters in ((EDGES, 3), ([("a", "b")], 2), (seeded_graph, 4)):
+        e = spark.createDataFrame(edges, "src string, dst string")
+        got = {r.node: r.rank
+               for r in pagerank_fixed_point(e, iters=iters).collect()}
+        assert got == _pagerank_py(edges, iters=iters)
+    assert "pagerank: 6 nodes" in caplog.text
+    assert f"{vector_regime} regime" in caplog.text
+
+
+def test_pagerank_empty_edges(spark):
+    out = pagerank_fixed_point(
+        spark.createDataFrame([], "src string, dst string"))
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<node:string,rank:bigint>"
+
+
+@pytest.mark.parametrize("op", [pagerank_fixed_point, hits_fixed_point])
+def test_iterative_operators_release_their_caches(spark, vector_regime, op):
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    out = op(spark.createDataFrame(EDGES, "src string, dst string"))
+    assert cache.numCachedEntries() == before
+    assert out.count() == 6  # the result does not need the released caches
 
 
 def test_extract_anchor_texts_normalizes_and_dedups(spark):

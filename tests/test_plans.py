@@ -3,6 +3,8 @@ scan, predicate pushdown, broadcast joins for small dimensions."""
 
 import contextlib
 import io
+import itertools
+import logging
 
 import pyspark.sql.functions as F
 import pytest
@@ -137,3 +139,38 @@ def test_bucketed_join_has_no_exchange(spark, corpus_dir, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         spark.sql("DROP TABLE IF EXISTS t_bucket_a")
         spark.sql("DROP TABLE IF EXISTS t_bucket_b")
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, thunk) -> int:
+    """Spark jobs ``thunk`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test-plans-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op, per_iter", [("pagerank_fixed_point", 4),
+                                          ("hits_fixed_point", 8)])
+def test_broadcast_regime_jobs_per_iteration(spark, caplog, op, per_iter):
+    """Below the broadcast threshold each vector update is one action of
+    four jobs: the vector's broadcast, the scalar's one-row aggregate (a
+    map stage, then its broadcast) and the materialized update. The
+    edge join, the groupBy and the node join add none: no Exchange, no
+    driver collect. PageRank updates once per iteration, HITS twice."""
+    from tecs_hardware_kbc_spark.operators import graph
+
+    caplog.set_level(logging.INFO, logger=graph.__name__)
+    fn = getattr(graph, op)
+    e = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 3) % 23}") for i in range(40)],
+        "src string, dst string")
+    one, two = (_jobs(spark, lambda k=k: fn(e, iters=k)) for k in (1, 2))
+    assert "broadcast regime" in caplog.text
+    assert two - one == per_iter

@@ -94,6 +94,25 @@ class TestHits:
         got = {r.node: (r.hub, r.auth) for r in out.collect()}
         assert got == _hits_reference(self.EDGES, iters=2)
 
+    def test_regimes_match_reference(self, spark, vector_regime, caplog,
+                                     seeded_graph):
+        from tecs_hardware_kbc_spark.operators.graph import (
+            hits_fixed_point)
+        for edges, iters in ((self.EDGES, 2), (seeded_graph, 3)):
+            out = hits_fixed_point(_edges(spark, edges), iters=iters)
+            got = {r.node: (r.hub, r.auth) for r in out.collect()}
+            assert got == _hits_reference(edges, iters=iters)
+        assert f"{vector_regime} regime" in caplog.text
+
+    def test_empty_edges(self, spark):
+        from tecs_hardware_kbc_spark.operators.graph import (
+            hits_fixed_point)
+        out = hits_fixed_point(
+            spark.createDataFrame([], "src string, dst string"))
+        assert out.collect() == []
+        assert out.schema.simpleString() == \
+            "struct<node:string,hub:bigint,auth:bigint>"
+
     def test_hub_authority_separation(self, spark):
         from tecs_hardware_kbc_spark.operators.graph import (
             hits_fixed_point)
