@@ -39,16 +39,20 @@ Scale shape: ``extract_links`` is one narrow projection + one explode
 PageRank and HITS are vector iterations over a cached edge list, run in
 one of two regimes chosen once per call (Hybrid Evaluation for
 Distributed Iterative Matrix Computation, SIGMOD 2021). The vector
-(one long per node) is sized from the exact node count and compared
-against Spark's own ``spark.sql.autoBroadcastJoinThreshold``:
+(one long per node) is sized exactly, as the UnsafeRow bytes of its
+rows, from the aggregate that also counts the nodes, and compared
+against Spark's own ``spark.sql.autoBroadcastJoinThreshold``, which
+then bounds every vector the call broadcasts:
 
 * broadcast (the vector fits): the edges are cached hash-partitioned on
-  the key each half-step aggregates by, and so is the node table. Each
-  iteration broadcasts the vector, joins it map-side, and the
-  ``groupBy`` and the node join run with no Exchange.
-* partitioned (it does not, or the threshold is -1): the edges are
-  cached on the join key instead, and the vector joins them through a
-  shuffle, with one map-combined Exchange for the ``groupBy``.
+  the key each half-step aggregates by, at most one partition per core,
+  and so is the node table. Each iteration broadcasts the vector, joins
+  it map-side, and the ``groupBy`` and the node join run with no
+  Exchange.
+* partitioned (it does not, or the threshold is -1): one copy of the
+  edges stays cached, and the vector joins it through a shuffle at
+  Spark's shuffle partition count (which AQE may coalesce or split for
+  skew), with one map-combined Exchange for the ``groupBy``.
 
 In both regimes the per-iteration scalars (PageRank's dangling mass,
 HITS' L1 sums) are one-row aggregates broadcast and cross-joined into
@@ -68,8 +72,9 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField
 
 from tecs_hardware_kbc_spark.operators.exprs import _let
 from tecs_hardware_kbc_spark.operators.urls import (
@@ -154,29 +159,51 @@ def extract_links(pages: DataFrame, url_col: str = "url",
 
 
 def _partitions(df: DataFrame) -> int:
-    """Partition count of the edge and node layouts: one per core,
-    capped by ``spark.sql.shuffle.partitions``. AQE never coalesces an
-    explicit count, so it is fixed up front near where AQE's
-    parallelism-first coalescing lands for inputs this small; at the
-    configured count, tiny tasks dominate every iteration."""
+    """Partition count of the broadcast regime's edge and node layouts:
+    one per core, capped by ``spark.sql.shuffle.partitions``. AQE never
+    coalesces an explicit count, so it is fixed up front near where
+    AQE's parallelism-first coalescing lands for inputs this small; at
+    the configured count, tiny tasks dominate every iteration."""
     spark = df.sparkSession
     return min(int(spark.conf.get("spark.sql.shuffle.partitions")),
                spark.sparkContext.defaultParallelism)
 
 
-def _broadcast_regime(op: str, nodes: DataFrame, n_nodes: int) -> bool:
-    """True when the iterated vector, ``n_nodes`` rows of (node, long),
-    fits under ``spark.sql.autoBroadcastJoinThreshold``. A row is sized
-    the way the planner sizes one without column statistics: an 8-byte
-    header plus each column's default width. A threshold of -1 always
-    selects the partitioned regime."""
-    limit = nodes.sparkSession._jsparkSession.sessionState().conf() \
+def _row_bytes(fields: list[StructField]) -> Column:
+    """Bytes of one row with ``fields`` in Spark's UnsafeRow format, the
+    format rows are broadcast in: a null-bit word per 64 fields, an
+    8-byte slot per field, and each string or binary value's bytes
+    padded to a word. The expression reads only the variable-width
+    fields, by name."""
+    n = len(fields)
+    size = F.lit(8 * ((n + 63) // 64 + n))
+    for f in fields:
+        if isinstance(f.dataType, (StringType, BinaryType)):
+            size = size + F.expr(
+                f"(coalesce(octet_length(`{f.name}`), 0) + 7) div 8 * 8")
+    return size
+
+
+def _fits(spark: SparkSession, size: int) -> tuple[bool, int]:
+    """(whether ``size`` bytes fit under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, the threshold). A threshold
+    of -1 never fits."""
+    limit = spark._jsparkSession.sessionState().conf() \
         .autoBroadcastJoinThreshold()
-    key = nodes._jdf.schema().apply("node").dataType().defaultSize()
-    size = n_nodes * (8 + key + 8)
-    small = size <= limit
-    _log.info("%s: %d nodes, vector ~%d B vs autoBroadcastJoinThreshold "
-              "%d B: %s regime", op, n_nodes, size, limit,
+    return 0 <= size <= limit, limit
+
+
+def _broadcast_regime(op: str, spark: SparkSession, n_nodes: int,
+                      vec_bytes: int) -> bool:
+    """True when the iterated vector, ``n_nodes`` rows of (node, long)
+    taking ``vec_bytes`` bytes as UnsafeRows, fits under
+    ``spark.sql.autoBroadcastJoinThreshold``. Every vector the broadcast
+    regime broadcasts is this one or a subset of its rows, so the
+    threshold bounds each broadcast. A threshold of -1 always selects
+    the partitioned regime."""
+    small, limit = _fits(spark, vec_bytes)
+    _log.info("%s: %d nodes, vector %d B vs autoBroadcastJoinThreshold "
+              "%d B: %s regime", op, n_nodes, vec_bytes, limit,
               "broadcast" if small else "partitioned")
     return small
 
@@ -193,13 +220,27 @@ def _edges_by(edges: DataFrame, key: str, n_parts: int) -> DataFrame:
             .repartition(n_parts, key).cache())
 
 
+def _joined_by(edges: DataFrame, key: str) -> DataFrame:
+    """The partitioned regime's PageRank edge list: ``edges`` re-cached
+    hash-partitioned on the join key ``key`` at Spark's own shuffle
+    partition count and sorted on it within partitions. It is
+    materialized here, and then ``edges``, the cache it is built from,
+    is released, so only one copy of the edge list stays cached."""
+    out = edges.repartition(key).sortWithinPartitions(key).cache()
+    out.count()
+    edges.unpersist()
+    return out
+
+
 def _node_table(by_src: DataFrame, by_dst: DataFrame,
-                n_parts: int) -> tuple[DataFrame, int]:
+                n_parts: int) -> tuple[DataFrame, int, int]:
     """(node, out_deg, in_deg) for every endpoint, cached
-    hash-partitioned on ``node`` like the edge layouts, and its exact
-    row count. Sources are read from ``by_src`` and targets from
-    ``by_dst``; with those partitioned on ``n_parts`` by src and by dst,
-    the aggregation needs no Exchange."""
+    hash-partitioned on ``node`` like the edge layouts, its exact row
+    count, and the exact UnsafeRow bytes of the (node, long) vector over
+    it, both from the one aggregate that materializes the cache. Sources
+    are read from ``by_src`` and targets from ``by_dst``; with those
+    partitioned on ``n_parts`` by src and by dst, the aggregation needs
+    no Exchange."""
     ends = (by_src.select(F.col("src").alias("node"), F.lit(1).alias("o"),
                           F.lit(0).alias("i"))
             .unionAll(by_dst.select(F.col("dst").alias("node"),
@@ -207,7 +248,9 @@ def _node_table(by_src: DataFrame, by_dst: DataFrame,
     nodes = (ends.groupBy("node")
              .agg(F.sum("o").alias("out_deg"), F.sum("i").alias("in_deg"))
              .repartition(n_parts, "node").cache())
-    return nodes, nodes.count()
+    vec = [nodes.schema["node"], StructField("x", LongType())]
+    n, size = nodes.agg(F.count(F.lit(1)), F.sum(_row_bytes(vec))).first()
+    return nodes, n, size or 0
 
 
 def _propagate(edges: DataFrame, vec: DataFrame, on: str, by: str,
@@ -257,28 +300,33 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
 
     Plan shape: the input is read once, into an edge cache partitioned
     on ``dst``; the node table (with out-degrees) comes from that cache
-    plus one Exchange of the source column. In the broadcast regime each iteration
-    broadcasts the shares ``rank // out_deg``, the ``groupBy(dst)``
-    inflow runs on the cached ``dst`` partitions, and the node join is
-    co-partitioned: no Exchange. In the partitioned regime the edges are
-    re-cached on ``src`` and each iteration shuffles the shares onto
-    them plus one map-combined ``groupBy(dst)`` Exchange. The dangling
-    mass is a broadcast one-row aggregate in both. The result is
-    materialized and every cache the call made is released before it
-    returns."""
+    plus one Exchange of the source column, and its one aggregate gives
+    the exact node count and vector bytes that choose the regime. In the
+    broadcast regime each iteration broadcasts the shares
+    ``rank // out_deg``, the ``groupBy(dst)`` inflow runs on the cached
+    ``dst`` partitions, and the node join is co-partitioned: no
+    Exchange. In the partitioned regime the edges are re-cached on
+    ``src`` at Spark's shuffle partition count, sorted for the
+    sort-merge join (the ``dst`` copy is released once that copy is
+    built), and each iteration shuffles the shares onto them plus one
+    map-combined ``groupBy(dst)`` Exchange. The dangling mass is a
+    broadcast one-row aggregate in both. The result is materialized
+    (with ``iters=0`` too) and every cache the call made is released
+    before it returns."""
     n_parts = _partitions(edges)
     e = _edges_by(edges, "dst", n_parts)
     cached = [e]
     try:
-        nodes, n_nodes = _node_table(e.repartition(n_parts, "src"), e,
-                                     n_parts)
+        nodes, n_nodes, vec_bytes = _node_table(
+            e.repartition(n_parts, "src"), e, n_parts)
         cached.append(nodes)
         if not n_nodes:
             return nodes.select("node", F.lit(0).cast("long").alias("rank")) \
                 .localCheckpoint(eager=True)
-        small = _broadcast_regime("pagerank", nodes, n_nodes)
+        small = _broadcast_regime("pagerank", edges.sparkSession, n_nodes,
+                                  vec_bytes)
         if not small:
-            e = _edges_by(e, "src", n_parts)
+            e = _joined_by(e, "src")
             cached.append(e)
         base = scale // n_nodes
         d, rem = int(damping_pct), 100 - int(damping_pct)
@@ -287,6 +335,8 @@ def pagerank_fixed_point(edges: DataFrame, iters: int = 3,
                                      + _idiv(F.col("s"), F.lit(n_nodes))),
                        F.lit(100))
         ranks = nodes.withColumn("x", F.lit(base).cast("long"))
+        if iters < 1:  # no update below materializes it
+            ranks = ranks.localCheckpoint(eager=True)
         for _ in range(iters):
             share = ranks.filter(F.col("out_deg") > 0).select(
                 "node", _idiv(F.col("x"), F.col("out_deg")).alias("x"))
@@ -415,17 +465,28 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     """
     # und feeds the degree count and both sides of the orientation
     # join; ori feeds the wedge self-join twice plus the closing-edge
-    # join — pin both so the upstream link harvest runs once, not 5x
-    und = undirect(edges).localCheckpoint()
+    # join — pin both so the upstream link harvest runs once, not 5x.
+    # The planner cannot size a checkpoint, so und's exact UnsafeRow
+    # bytes are observed while it is written (no extra job). Each side
+    # broadcast below is at most twice that (deg: two node rows per und
+    # row at most; the ori projections: an und row plus one long), so
+    # when twice und fits under the threshold those four joins broadcast
+    # that side instead of shuffling both until AQE switches strategy.
+    size = Observation("und")
+    und = undirect(edges)
+    und = und.observe(size, F.sum(_row_bytes(und.schema.fields))
+                      .alias("b")).localCheckpoint()
+    small, _ = _fits(edges.sparkSession, 2 * (size.get["b"] or 0))
+    side = F.broadcast if small else (lambda df: df)
     deg = (und.select(F.col("a").alias("node"))
            .unionByName(und.select(F.col("b").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
     # orient by (deg, node): lo -> hi
-    e = (und
+    e = (side(und)
          .join(deg.withColumnRenamed("node", "a")
                .withColumnRenamed("deg", "_da"), "a")
-         .join(deg.withColumnRenamed("node", "b")
-               .withColumnRenamed("deg", "_db"), "b"))
+         .join(side(deg.withColumnRenamed("node", "b")
+                    .withColumnRenamed("deg", "_db")), "b"))
     a_lo = (F.col("_da") < F.col("_db")) | (
         (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b")))
     ori = e.select(
@@ -442,11 +503,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
                     F.col("_dh").alias("_dy"))
     x_lo = (F.col("_dx") < F.col("_dy")) | (
         (F.col("_dx") == F.col("_dy")) & (F.col("x") < F.col("y")))
-    wedges = (l_.join(r_, "w")
+    wedges = (l_.join(side(r_), "w")
               .filter(x_lo)
               .select("w", "x", "y"))
     tri = wedges.join(
-        ori.select(F.col("lo").alias("x"), F.col("hi").alias("y")),
+        side(ori.select(F.col("lo").alias("x"), F.col("hi").alias("y"))),
         ["x", "y"])
     per_node = (tri.select(F.explode(F.array("w", "x", "y"))
                            .alias("node"))
@@ -495,30 +556,42 @@ def hits_fixed_point(edges: DataFrame, iters: int = 2,
     Plan shape: the input is read once, into an edge cache partitioned
     on ``dst``, re-cached on ``src``; the node table (with both degrees)
     aggregates sources from the one and targets from the other with no
-    Exchange. Each half-step aggregates by one endpoint: authority by
-    ``dst``, hub by ``src``. In the broadcast regime it broadcasts the
-    counterpart scores onto the edge copy partitioned by that key, so
-    the ``groupBy`` and the node join run with no Exchange; in the
-    partitioned regime it uses the copy partitioned by the join key and
-    shuffles the scores plus one map-combined ``groupBy`` Exchange. The
-    L1 sum needs no edge scan (``sum_v auth_raw(v) = sum_u hub(u) *
+    Exchange, and its one aggregate gives the exact node count and
+    vector bytes that choose the regime. Each half-step aggregates by
+    one endpoint: authority by ``dst``, hub by ``src``. In the broadcast
+    regime it broadcasts the counterpart scores onto the edge copy
+    partitioned by that key, so the ``groupBy`` and the node join run
+    with no Exchange. In the partitioned regime the ``src`` copy is
+    released and the ``dst`` copy is the one edge cache: each half-step
+    joins the scores to it through a shuffle at Spark's shuffle
+    partition count, plus one map-combined ``groupBy`` Exchange. The L1
+    sum needs no edge scan (``sum_v auth_raw(v) = sum_u hub(u) *
     out_deg(u)``, and the same for hubs with in-degrees); it is a
     broadcast one-row aggregate over the previous vector. Nodes with no
     in-links (or no out-links) hold score 0 after the first half-step,
-    as in the reference formulation. An empty edge list gives an empty
-    frame. Every cache the call made is released before it returns."""
+    as in the reference formulation. ``iters`` must be at least 1. An
+    empty edge list gives an empty frame. Every cache the call made is
+    released before it returns."""
+    if iters < 1:
+        raise ValueError(f"hits_fixed_point needs iters >= 1, got {iters}")
     n_parts = _partitions(edges)
     by = {"dst": _edges_by(edges, "dst", n_parts)}
     by["src"] = _edges_by(by["dst"], "src", n_parts)
     cached = list(by.values())
     try:
-        nodes, n_nodes = _node_table(by["src"], by["dst"], n_parts)
+        nodes, n_nodes, vec_bytes = _node_table(by["src"], by["dst"],
+                                                n_parts)
         cached.append(nodes)
         if not n_nodes:
             zero = F.lit(0).cast("long")
             return nodes.select("node", zero.alias("hub"),
                                 zero.alias("auth")).localCheckpoint(eager=True)
-        small = _broadcast_regime("hits", nodes, n_nodes)
+        small = _broadcast_regime("hits", edges.sparkSession, n_nodes,
+                                  vec_bytes)
+        if not small:
+            # the node table is built, so nothing reads the src copy
+            by["src"].unpersist()
+            by["src"] = by["dst"]
         # SQL `div` (not _idiv): the product reaches scale^2 = 1e18,
         # past the 2^53 exactness window of _idiv's double path
         snap = F.expr(f"x * {scale}L div s")
@@ -527,12 +600,11 @@ def hits_fixed_point(edges: DataFrame, iters: int = 2,
             total = _scalar(vec, F.greatest(
                 F.coalesce(F.sum(F.col("x") * F.col(deg)), F.lit(1)),
                 F.lit(1)))
-            raw = _propagate(by[agg if small else on],
-                             vec.filter(F.col(deg) > 0), on, agg, small)
+            raw = _propagate(by[agg], vec.filter(F.col(deg) > 0), on, agg,
+                             small)
             return _update(nodes, raw, total, snap)
 
         hub = nodes.withColumn("x", F.lit(scale // n_nodes).cast("long"))
-        auth = None
         for _ in range(iters):
             auth = half_step(hub, "src", "dst", "out_deg")
             hub = half_step(auth, "dst", "src", "in_deg")

@@ -1,5 +1,7 @@
 """Link-graph construction + fixed-point PageRank (operators/graph.py)."""
 
+import logging
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -114,6 +116,48 @@ def test_pagerank_empty_edges(spark):
         spark.createDataFrame([], "src string, dst string"))
     assert out.collect() == []
     assert out.schema.simpleString() == "struct<node:string,rank:bigint>"
+
+
+def test_pagerank_zero_iterations_is_materialized(spark):
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    out = pagerank_fixed_point(
+        spark.createDataFrame(EDGES, "src string, dst string"), iters=0)
+    assert cache.numCachedEntries() == before
+    # read from the checkpoint alone: no released cache, no recompute
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan
+    assert "InMemoryRelation" not in plan and "Aggregate" not in plan
+    assert {r.rank for r in out.collect()} == {DEFAULT_SCALE // 6}
+
+
+def test_hits_needs_an_iteration(spark):
+    with pytest.raises(ValueError, match="iters >= 1"):
+        hits_fixed_point(
+            spark.createDataFrame(EDGES, "src string, dst string"), iters=0)
+
+
+@pytest.mark.parametrize("slack, regime", [(0, "broadcast"),
+                                           (-1, "partitioned")])
+def test_regime_sized_from_real_vector_bytes(spark, caplog, slack, regime):
+    """The vector is sized from its rows' real UnsafeRow bytes: each
+    (node, long) row is a null-bit word, two 8-byte slots and the
+    node's UTF-8 bytes padded to a word, so six 100-byte names take
+    6 * (24 + 104) = 768 B, far above a per-type default width."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    names = [c * 100 for c in "abcdef"]
+    pairs = [(names[0], n) for n in names[1:]]
+    caplog.set_level(logging.INFO,
+                     logger="tecs_hardware_kbc_spark.operators.graph")
+    spark.conf.set(key, str(768 + slack))
+    try:
+        pagerank_fixed_point(
+            spark.createDataFrame(pairs, "src string, dst string"), iters=1)
+    finally:
+        spark.conf.set(key, old)
+    assert f"6 nodes, vector 768 B vs autoBroadcastJoinThreshold " \
+        f"{768 + slack} B: {regime} regime" in caplog.text
 
 
 @pytest.mark.parametrize("op", [pagerank_fixed_point, hits_fixed_point])

@@ -5,6 +5,7 @@ import contextlib
 import io
 import itertools
 import logging
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -174,3 +175,50 @@ def test_broadcast_regime_jobs_per_iteration(spark, caplog, op, per_iter):
     one, two = (_jobs(spark, lambda k=k: fn(e, iters=k)) for k in (1, 2))
     assert "broadcast regime" in caplog.text
     assert two - one == per_iter
+
+
+def _recent_sql(spark, n: int = 200) -> list:
+    """The last ``n`` SQL executions in the status store, oldest first.
+    The store keeps only the most recent executions, so it is read from
+    its end, after the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = store.executionsCount()
+    n = min(n, total)
+    runs = store.executionsList(total - n, n) if n else None
+    return [runs.apply(i) for i in range(n)]
+
+
+@pytest.mark.parametrize("threshold, broadcast", [(None, True), ("-1", False)])
+def test_triangle_joins_broadcast_a_small_graph(spark, threshold,
+                                                broadcast):
+    """``triangle_counts`` sizes its checkpointed undirected edge list
+    exactly, so when the graph fits under the broadcast threshold the
+    orientation joins (keyed by ``a``, then ``b``), the wedge self-join
+    (``w``) and the closing join (``x, y``) broadcast their small side
+    from the first plan on, instead of shuffling both sides and leaving
+    AQE to switch strategy after the shuffle ran. The plans are read
+    from the SQL status store, which also holds the checkpoints'."""
+    from tecs_hardware_kbc_spark.operators.graph import triangle_counts
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if threshold is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, threshold)
+    last = max((r.executionId() for r in _recent_sql(spark)), default=-1)
+    try:
+        e = spark.createDataFrame(
+            [(f"n{i}", f"n{(i * 7 + 3) % 23}") for i in range(40)],
+            "src string, dst string")
+        triangle_counts(e).collect()
+    finally:
+        spark.conf.set(key, old)
+    plans = "".join(r.physicalPlanDescription() for r in _recent_sql(spark)
+                    if r.executionId() > last)
+    keys = [r"\(a#\d+, \d+\)", r"\(b#\d+, \d+\)", r"\(w#\d+, \d+\)",
+            r"\(x#\d+, y#\d+, \d+\)"]
+    shuffled = [k for k in keys
+                if re.search("hashpartitioning" + k, plans)]
+    assert shuffled == ([] if broadcast else keys)
